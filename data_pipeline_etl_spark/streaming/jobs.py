@@ -63,7 +63,7 @@ def run_to_memory_sink(
     stream_df: DataFrame,
     query_name: str,
     output_mode: str = "complete",
-    state_partitions: int = 8,
+    state_partitions: int | None = None,
 ) -> None:
     """Execute a streaming query to an in-memory sink until the file
     backlog is drained (availableNow trigger).
@@ -72,28 +72,36 @@ def run_to_memory_sink(
     operators partition their state by ``spark.sql.shuffle.partitions``
     *as captured when the query starts*, and every micro-batch commits a
     delta file per state partition per stateful operator. The batch
-    default (32 here) is sized for shuffle parallelism, not state
-    commits — at fixture scale it means 32 near-empty state files per
-    batch, and on a cluster the same mismatch shows up as thousands of
-    tiny checkpoint objects. 8 keeps the drain parallel while cutting
-    the fixed commit overhead 4x (measured: the 7 live queries fall
-    ~17.3s -> ~10s total at sf0.1). The knob only affects physical
-    state layout — values are identical for any setting — and is
-    restored immediately after the drain so batch queries keep the
+    default is sized for shuffle parallelism, not state commits — at
+    fixture scale it means dozens of near-empty state files per batch,
+    and on a cluster the same mismatch shows up as thousands of tiny
+    checkpoint objects. The default, ``min(8, defaultParallelism)``,
+    keeps the drain parallel with one task wave per micro-batch: 8 cut
+    the fixed commit overhead 4x against a 32-partition default
+    (measured: the 7 live queries fall ~17.3s -> ~10s total at sf0.1),
+    and on ``local[4]`` 4 beats 8, which runs two waves per batch
+    (q_stream_tumbling_live, warm median over 15 perfbench etl_ingest
+    runs on 4 vCPUs: 1.20 -> 1.11 s). The knob only affects
+    physical state layout — values are identical for any setting — and
+    is restored immediately after the drain so batch queries keep the
     session default.
 
     CONCURRENCY ASSUMPTION: the shuffle-partition override is a
     session-global conf mutation for the duration of the drain — any
     batch query planned concurrently on the same SparkSession would
     plan with ``state_partitions`` partitions during that window.
-    The repo's flows (tests, bench, driver) run queries sequentially,
-    so this is safe here; a concurrent caller must isolate the drain
+    The package does submit concurrent jobs (``run_etl``'s loads and
+    quality gate), but none of them drains a stream, and tests, bench
+    and driver run the drains themselves sequentially, so this is safe
+    here; a concurrent caller must isolate the drain
     on ``spark.newSession()`` (confs are per-session) instead. On a real cluster you size it to
     |cores| .. |state volume / target partition size|, and it is FIXED
     for the life of a checkpoint (changing it requires a state rebuild
     — Spark refuses to reload state across a partition-count change).
     """
     spark = stream_df.sparkSession
+    if state_partitions is None:
+        state_partitions = min(8, spark.sparkContext.defaultParallelism)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     try:

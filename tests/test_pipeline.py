@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import threading
+
+import pytest
 from pyspark.sql import functions as F
 
 from data_pipeline_etl_spark.plans import pipeline
@@ -34,15 +37,34 @@ def test_full_etl_run(spark, tmp_path):
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
 
+    # the run log counts what the files hold
+    for name, n in counts.items():
+        assert spark.read.parquet(f"{out}/{name}").count() == n
 
-def test_dq_gate_catches_violations(spark, tmp_path):
-    """Corrupt staging data must fail the quality gate (orphan FK)."""
-    import pytest
-    from data_pipeline_etl_spark.operators import quality
-    from data_pipeline_etl_spark.sources import tables
 
-    bad_dir = str(tmp_path / "bad_sf")
-    for t in ("orders", "customer", "lineitem"):
+def test_etl_jobs_run_in_callers_job_group(spark, tmp_path):
+    """Every job of the concurrent loads and the gate carries the caller's
+    job group: none runs untagged."""
+    sc = spark.sparkContext
+    status = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    group = "test-etl-job-group"
+    bus.waitUntilEmpty(10_000)
+    untagged = set(status.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "run_etl")
+    try:
+        pipeline.run_etl(spark, SF_DIR, str(tmp_path / "warehouse"))
+    finally:
+        sc._jsc.clearJobGroup()
+    bus.waitUntilEmpty(10_000)
+    assert set(status.getJobIdsForGroup(None)) <= untagged
+    # at least one job per write plus the gate's collect
+    assert len(status.getJobIdsForGroup(group)) >= 4
+
+
+def _corrupt_fixture(spark, bad_dir: str) -> None:
+    """A fixture copy where every 100th order points at a missing customer."""
+    for t in ("orders", "customer", "lineitem", "nation", "region"):
         df = table(spark, SF_DIR, t)
         if t == "orders":
             # point some orders at a customer that doesn't exist
@@ -54,9 +76,24 @@ def test_dq_gate_catches_violations(spark, tmp_path):
             )
         df.write.mode("overwrite").parquet(f"{bad_dir}/{t}.parquet")
 
+
+def test_dq_gate_catches_violations(spark, tmp_path):
+    """Corrupt staging data must fail the quality gate (orphan FK)."""
+    from data_pipeline_etl_spark.operators import quality
+
+    bad_dir = str(tmp_path / "bad_sf")
+    _corrupt_fixture(spark, bad_dir)
+
     checks = {r["check_name"]: r["n_bad"] for r in quality.q_dq_checks(spark, bad_dir).collect()}
     assert checks["orders_orphan_custkey"] > 0
     assert checks["customer_dup_pk"] == 0
+
+
+def test_run_etl_fails_its_quality_gate(spark, tmp_path):
+    bad_dir = str(tmp_path / "bad_sf")
+    _corrupt_fixture(spark, bad_dir)
+    with pytest.raises(ValueError, match="orders_orphan_custkey"):
+        pipeline.run_etl(spark, bad_dir, str(tmp_path / "warehouse"))
 
 
 def test_merge_upsert_scd1(spark):
@@ -89,8 +126,33 @@ def test_text_pipeline_composition(spark, tmp_path):
     assert counts["raw"] >= counts["after_dedup"] >= counts["after_quality"]
     assert counts["written"] == counts["after_quality"]
     assert counts["after_quality"] > 0
-    # partition layout by lang prunes
     back = spark.read.parquet(out)
+    assert back.count() == counts["written"]
+    # partition layout by lang prunes
     assert set(back.columns) == {"doc_id", "lang", "source", "n_tokens", "digest"}
     plan = back.where(F.col("lang") == "en")._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
+
+
+def test_text_pipeline_all_rows_fail_quality(spark, tmp_path):
+    """A corpus the quality gate empties writes nothing, and every stage
+    count still arrives: an empty stage must not leave its row counter
+    waiting."""
+    sf_dir = str(tmp_path / "sf")
+    spark.createDataFrame(
+        [(1, "too short", "en", "web", 9), (2, "too  short", "en", "web", 10),
+         (3, "also short", "de", "wiki", 10)],
+        "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    ).write.parquet(f"{sf_dir}/documents.parquet")
+
+    result = {}
+    worker = threading.Thread(
+        target=lambda: result.update(
+            pipeline.run_text_pipeline(spark, sf_dir, str(tmp_path / "corpus"))
+        ),
+        daemon=True,
+    )
+    worker.start()
+    worker.join(timeout=120)
+    assert not worker.is_alive()
+    assert result == {"raw": 3, "after_dedup": 2, "after_quality": 0, "written": 0}
