@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_pipeline_etl_spark.registry import query
-from data_pipeline_etl_spark.sources.tables import table
+from data_pipeline_etl_spark.sources.tables import fanout, table
 
 
 def _lang_tok_counts(d: DataFrame) -> DataFrame:
@@ -287,8 +287,6 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     r17: input fanned out — the bigram derivation otherwise serializes
     on the one-row-group local fixture (measured ~1.17× warm at sf0.1;
     no-op on multi-split cluster layouts)."""
-    from data_pipeline_etl_spark.sources.tables import fanout
-
     return decontaminate_for(fanout(table(spark, sf_dir, "documents")))
 
 

@@ -19,8 +19,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_pipeline_etl_spark.checkpoints import free_local_checkpoint
+from data_pipeline_etl_spark.operators.materialized import artifact
 from data_pipeline_etl_spark.registry import query
-from data_pipeline_etl_spark.sources.tables import table
+from data_pipeline_etl_spark.sources.tables import fanout, table
 
 def _norm_spark():
     return F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")))
@@ -185,32 +186,34 @@ def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bigram-shingle Jaccard near-dup pairs, blocked by (lang, source).
 
     Shingles come from posexplode + lead() (codegen'd window) instead of
-    an interpreted transform-over-sequence. r17: the element frame is
-    localCheckpoint'ed per call — the downstream self-join otherwise
-    evaluates the whole tokenize → window → distinct subtree TWICE
-    (Catalyst does not share the aliased subtree), so one barrier halves
-    the element passes (measured 1.81 → 1.42 s warm at sf0.1, fanout
-    included so the single pass parallelizes past the one-row-group
-    fixture; single-consumer element frame, so a per-call barrier — not
-    a session artifact — is the right §5 shape).
+    an interpreted transform-over-sequence. The element frame is the
+    :func:`ngram_elements_table` artifact: the downstream self-join
+    would otherwise evaluate the whole tokenize → window → distinct
+    subtree TWICE (Catalyst does not share the aliased subtree).
     """
-    from pyspark.sql import Window
+    return _inverted_index_jaccard(ngram_elements_table(spark, sf_dir), 0.4)
 
-    from data_pipeline_etl_spark.sources.tables import fanout
+
+@artifact("ngram_elements")
+def ngram_elements_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct bigram-shingle element frame (doc_id, lang, source, el)
+    over ``fanout(documents)``, so the single tokenize pass parallelizes
+    past the one-row-group local fixture. Built once per session: a
+    per-call checkpoint would leave one more held copy behind per call."""
+    from pyspark.sql import Window
 
     d = fanout(table(spark, sf_dir, "documents"))
     tok = d.select(
         "doc_id", "lang", "source", F.posexplode(F.split("text", " ")).alias("pos", "tok")
     )
     w = Window.partitionBy("doc_id").orderBy("pos")
-    ex = (
+    return (
         tok.withColumn("nxt", F.lead("tok").over(w))
         .where(F.col("nxt").isNotNull())
         .select("doc_id", "lang", "source", F.concat_ws(" ", "tok", "nxt").alias("el"))
         .distinct()
         .localCheckpoint()
     )
-    return _inverted_index_jaccard(ex, 0.4)
 
 
 @query(
@@ -241,32 +244,25 @@ def q_sim_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return neardup_pairs_table(spark, sf_dir)
 
 
+@artifact("neardup_pairs")
 def neardup_pairs_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-scoped materialize-once Jaccard>=0.8 near-dup pair frame
-    (doc_a, doc_b, jaccard) over the documents table — the ONE pair
-    graph q_sim_jaccard returns, q_dedup_degree histograms, and the
-    cluster-label build (dedup_clusters_table) runs CC over. At 100 TB
-    the near-dup pair table is the materialized artifact every dedup
-    consumer reads; see operators/materialized.py. Since r17 the build
-    reads the shared :func:`unigram_elements_table` instead of
-    re-tokenizing the corpus (values identical — same elements, same
-    join; only the element pass moved into the shared artifact)."""
-    from data_pipeline_etl_spark.operators.materialized import materialize_once
-
-    return materialize_once(
-        spark,
-        ("neardup_pairs", sf_dir.rstrip("/")),
-        lambda: _inverted_index_jaccard(
-            unigram_elements_table(spark, sf_dir), 0.8
-        ).localCheckpoint(),
-    )
+    """Jaccard>=0.8 near-dup pair frame (doc_a, doc_b, jaccard) over the
+    documents table — the ONE pair graph q_sim_jaccard returns,
+    q_dedup_degree histograms, and the cluster-label build
+    (dedup_clusters_table) runs CC over. At 100 TB the near-dup pair
+    table is the materialized artifact every dedup consumer reads. The
+    build reads the shared :func:`unigram_elements_table` instead of
+    re-tokenizing the corpus."""
+    return _inverted_index_jaccard(
+        unigram_elements_table(spark, sf_dir), 0.8
+    ).localCheckpoint()
 
 
+@artifact("unigram_elements")
 def unigram_elements_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-scoped materialize-once exploded distinct-unigram element
-    frame (doc_id, lang, source, el) over the documents table — the
-    corpus tokenization the whole exact-set dedup family keys on
-    (VERDICT r16 item 4). Two consumers: the
+    """Exploded distinct-unigram element frame (doc_id, lang, source,
+    el) over the documents table — the corpus tokenization the whole
+    exact-set dedup family keys on. Two consumers: the
     :func:`neardup_pairs_table` build and q_dedup_containment (whose
     element self-join otherwise evaluates the tokenize+explode subtree
     twice per call). Size is corpus-element-bounded (~116k rows of four
@@ -276,16 +272,9 @@ def unigram_elements_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenize pass parallelizes past the one-row-group local fixture
     (values are partition-invariant; fanout is a no-op on multi-split
     cluster layouts)."""
-    from data_pipeline_etl_spark.operators.materialized import materialize_once
-    from data_pipeline_etl_spark.sources.tables import fanout
-
-    return materialize_once(
-        spark,
-        ("unigram_elements", sf_dir.rstrip("/")),
-        lambda: _unigram_elements(
-            fanout(table(spark, sf_dir, "documents"))
-        ).localCheckpoint(),
-    )
+    return _unigram_elements(
+        fanout(table(spark, sf_dir, "documents"))
+    ).localCheckpoint()
 
 
 # --- SimHash ---------------------------------------------------------------
@@ -323,8 +312,6 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     serialize on the one-row-group local fixture (measured 1.16× warm
     at sf0.1; no-op on multi-split cluster layouts).
     """
-    from data_pipeline_etl_spark.sources.tables import fanout
-
     d = fanout(table(spark, sf_dir, "documents"))
     tok = d.select(
         "doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("tok")
@@ -478,25 +465,19 @@ def _minhash_sig(d: DataFrame, with_block: bool = False) -> DataFrame:
     return tok.groupBy(*keys).agg(*aggs)
 
 
+@artifact("minhash_sig")
 def minhash_sig_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-scoped materialize-once MinHash signature frame
-    (doc_id, lang, source, mh0..mh{k-1}) for the documents table — the
-    artifact the whole LSH dedup path reads: q_dedup_minhash_sig
+    """MinHash signature frame (doc_id, lang, source, mh0..mh{k-1}) for
+    the documents table — the artifact the whole LSH dedup path reads: q_dedup_minhash_sig
     publishes it, q_dedup_lsh_candidates buckets it, and the
     incremental/ingest/store-compact loop filters its store/batch
     halves from it (per-doc signatures are split-independent, so
     filtering the one frame equals signing each half). At 100 TB the
     signature store IS a materialized table (the q_dedup_incremental
-    docstring's store index); see operators/materialized.py."""
-    from data_pipeline_etl_spark.operators.materialized import materialize_once
-
-    return materialize_once(
-        spark,
-        ("minhash_sig", sf_dir.rstrip("/")),
-        lambda: _minhash_sig(
-            table(spark, sf_dir, "documents"), with_block=True
-        ).localCheckpoint(),
-    )
+    docstring's store index)."""
+    return _minhash_sig(
+        table(spark, sf_dir, "documents"), with_block=True
+    ).localCheckpoint()
 
 
 def _band_key(b: int):
@@ -1235,28 +1216,18 @@ def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_clusters_table(spark, sf_dir)
 
 
+@artifact("dedup_clusters")
 def dedup_clusters_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-scoped materialize-once cluster labels for the documents
-    table — the (doc_id, cluster_id) frame all five cluster-riding
-    queries read. At 100 TB cluster labels are a materialized table the
-    whole curation pipeline consumes (dedup survivors, leakage-safe
-    splits, dedup-aware mixtures all key on it); rebuilding the pair
-    graph + CC fixpoint per query was a per-query-self-containment
-    choice the r15 verdict costed at 20.1 s / 8.4% of the bench. The
-    build is the probed dedup_clusters_for body, unchanged; the
-    |docs|-row result is localCheckpoint'ed and cached per
-    (session, sf_dir) — see operators/materialized.py for the
-    determinism/lifetime argument."""
-    from data_pipeline_etl_spark.operators.materialized import materialize_once
-
-    return materialize_once(
-        spark,
-        ("dedup_clusters", sf_dir.rstrip("/")),
-        lambda: _clusters_from_pairs(
-            table(spark, sf_dir, "documents"),
-            neardup_pairs_table(spark, sf_dir).select("doc_a", "doc_b"),
-        ).localCheckpoint(),
-    )
+    """Cluster labels for the documents table — the (doc_id, cluster_id)
+    frame all five cluster-riding queries read. At 100 TB cluster labels
+    are a materialized table the whole curation pipeline consumes (dedup
+    survivors, leakage-safe splits, dedup-aware mixtures all key on it).
+    The build is the probed dedup_clusters_for body over the shared pair
+    artifact; the |docs|-row result is localCheckpoint'ed."""
+    return _clusters_from_pairs(
+        table(spark, sf_dir, "documents"),
+        neardup_pairs_table(spark, sf_dir).select("doc_a", "doc_b"),
+    ).localCheckpoint()
 
 
 def dedup_clusters_for(d: DataFrame, elements: DataFrame | None = None) -> DataFrame:
@@ -1328,8 +1299,6 @@ def q_dedup_editdist(spark: SparkSession, sf_dir: str) -> DataFrame:
     length). Unbounded levenshtein over full fixture texts measured
     114 s at sf0.1; this blocked+bounded shape is <1 s.
     """
-    from data_pipeline_etl_spark.sources.tables import fanout
-
     # per-pair prefix-Levenshtein DP dominates: parallelize the scan
     # (measured -1.2 s at sf0.1 vs single-task; no-op on clusters)
     d = (
@@ -1439,8 +1408,6 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     serializes on the one-row-group local fixture (measured ~1.18×
     warm at sf0.1; no-op on multi-split cluster layouts).
     """
-    from data_pipeline_etl_spark.sources.tables import fanout
-
     return substring_spans(fanout(table(spark, sf_dir, "documents")))
 
 

@@ -21,8 +21,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_pipeline_etl_spark.operators.materialized import artifact
 from data_pipeline_etl_spark.registry import query
-from data_pipeline_etl_spark.sources.tables import table
+from data_pipeline_etl_spark.sources.tables import fanout, table
 
 # Deterministic 3/16 ≈ 18.75% sample: first hex digit of md5(text) in 0..2.
 # Identical on any engine with md5 — reproducible across runs, retries, and
@@ -805,7 +806,6 @@ def q_sample_cluster_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
     (q_sim_ivf_assign's note), so the scan itself prunes per cell.
     """
     from data_pipeline_etl_spark.operators.llm_similarity import ivf_assign_for
-    from data_pipeline_etl_spark.sources.tables import fanout
 
     assign = ivf_assign_for(fanout(table(spark, sf_dir, "embeddings")))
     hashed = assign.select(
@@ -1655,6 +1655,35 @@ def mix_dedup_aware_for(
     )
 
 
+def _store_and_batch(d: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """q_split_incremental's cut: the store is the older half of the
+    doc ids, the batch the arrival-ordered newer half."""
+    cut = d.agg((F.max("doc_id") / 2).alias("cut"))
+    dc = d.crossJoin(F.broadcast(cut))
+    store = dc.where(F.col("doc_id") < F.col("cut"))
+    return store, dc.where(F.col("doc_id") >= F.col("cut"))
+
+
+@artifact("split_store")
+def _split_store(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The store half's materialized state that production screens every
+    arriving batch against (q_dedup_incremental's store-index topology):
+    its unigram element index and its split assignment (the probed
+    dedup_clusters_for body at half corpus). ONE store element build,
+    read by both the store CC body and q_split_incremental's batch
+    screen."""
+    from data_pipeline_etl_spark.operators.llm_dedup import _unigram_elements
+
+    store, _ = _store_and_batch(table(spark, sf_dir, "documents"))
+    exs = _unigram_elements(store).localCheckpoint()
+    ssplit = (
+        split_leakage_for(store, elements=exs)
+        .select(F.col("doc_id").alias("sid"), F.col("split").alias("store_split"))
+        .localCheckpoint()
+    )
+    return exs, ssplit
+
+
 @query(
     "q_split_incremental",
     oracle="""
@@ -1742,9 +1771,10 @@ def q_split_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     at the next recluster.
 
     Scale shape: the store's own split assignment is the materialized
-    table production reads, recomputed here only so the query is
-    self-contained and oracle-able (store-side pair build + CC — the
-    probed dedup_clusters_for body at half corpus). The batch screen is
+    table production reads; here it is the :func:`_split_store`
+    artifact, built from the fixture so the query stays oracle-able
+    (store-side pair build + CC — the probed dedup_clusters_for body at
+    half corpus). The batch screen is
     the asymmetric inverted-index join: store-elements x batch-elements
     equi-join on (lang, source, el), per-pair intersection counts, set
     sizes joined after — pairs only materialize for docs sharing an
@@ -1753,37 +1783,9 @@ def q_split_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard verification, i.e. LSH candidates -> verify -> inherit).
     """
     from data_pipeline_etl_spark.operators.llm_dedup import _unigram_elements
-    from data_pipeline_etl_spark.operators.materialized import materialize_once
 
-    d = table(spark, sf_dir, "documents")
-    cut = d.agg((F.max("doc_id") / 2).alias("cut"))
-    dc = d.crossJoin(F.broadcast(cut))
-    store = dc.where(F.col("doc_id") < F.col("cut"))
-    batch = dc.where(F.col("doc_id") >= F.col("cut"))
-
-    def build_store() -> tuple[DataFrame, DataFrame]:
-        # ONE store element build, checkpointed, read by BOTH the store
-        # CC body and the batch screen below (ADVICE r15 item 1 — the
-        # store half was tokenized+exploded twice per run); with the
-        # split assignment it is the materialized store state
-        # production screens every arriving batch against
-        # (q_dedup_incremental's store-index topology).
-        exs_cp = _unigram_elements(store).localCheckpoint()
-        ssplit_cp = (
-            split_leakage_for(store, elements=exs_cp)
-            .select(
-                F.col("doc_id").alias("sid"),
-                F.col("split").alias("store_split"),
-            )
-            .localCheckpoint()
-        )
-        return exs_cp, ssplit_cp
-
-    # the store's materialized assignment + inverted index (probed
-    # dedup_clusters_for body at half corpus), built once per session
-    exs, ssplit = materialize_once(
-        spark, ("split_store", sf_dir.rstrip("/")), build_store
-    )
+    _, batch = _store_and_batch(table(spark, sf_dir, "documents"))
+    exs, ssplit = _split_store(spark, sf_dir)
 
     # asymmetric inverted-index Jaccard: store elements x batch elements
     exb = _unigram_elements(batch)

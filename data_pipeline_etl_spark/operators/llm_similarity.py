@@ -35,8 +35,9 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_pipeline_etl_spark.checkpoints import free_local_checkpoint
+from data_pipeline_etl_spark.operators.materialized import artifact
 from data_pipeline_etl_spark.registry import query
-from data_pipeline_etl_spark.sources.tables import table
+from data_pipeline_etl_spark.sources.tables import fanout, table
 
 
 def dot64(a: str, b: str) -> Column:
@@ -165,8 +166,6 @@ def q_sim_knn_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     r17: base fanned out (the q_sim_cosine_topk pattern) — the per-pair
     cosine folds otherwise serialize on the one-row-group fixture
     (measured 1.28× warm at sf0.1; no-op on multi-split layouts)."""
-    from data_pipeline_etl_spark.sources.tables import fanout
-
     base = fanout(_normed(spark, sf_dir))
     q = base.where(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe"), F.col("nrm").alias("qn")
@@ -367,25 +366,17 @@ def band_pairs_from_bits(bit_frame: DataFrame, bands: int, rows: int) -> DataFra
     )
 
 
+@artifact("lsh_band_pairs")
 def _band_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-scoped materialize-once LSH candidate pairs over the
-    embeddings table (fanout: the single-row-group fixture scan
-    parallelizes for the signature folds; no-op on clusters). The
-    candidate set is an artifact too: q_sim_neardup rescopes it per
-    query vector, q_sim_pairs_lsh thresholds it, and q_dedup_semantic
-    clusters it — one signature pass + one bucket shuffle per session
-    instead of three (operators/materialized.py; the probe path
-    band_candidate_pairs_for stays fresh)."""
-    from data_pipeline_etl_spark.operators.materialized import materialize_once
-    from data_pipeline_etl_spark.sources.tables import fanout
-
-    return materialize_once(
-        spark,
-        ("lsh_band_pairs", sf_dir.rstrip("/")),
-        lambda: band_candidate_pairs_for(
-            fanout(table(spark, sf_dir, "embeddings"))
-        ).localCheckpoint(),
-    )
+    """LSH candidate pairs over the embeddings table (fanout: the
+    single-row-group fixture scan parallelizes for the signature folds;
+    no-op on clusters). q_sim_neardup rescopes it per query vector,
+    q_sim_pairs_lsh thresholds it, and q_dedup_semantic clusters it —
+    one signature pass + one bucket shuffle per session instead of
+    three (the probe path band_candidate_pairs_for stays fresh)."""
+    return band_candidate_pairs_for(
+        fanout(table(spark, sf_dir, "embeddings"))
+    ).localCheckpoint()
 
 
 _IVF_K = 8  # seed centroids = vectors with vec_id < _IVF_K (deterministic)
@@ -430,8 +421,6 @@ def q_sim_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance hash-check exactly; the (d2, cell) ordering makes any
     exact tie deterministic.
     """
-    from data_pipeline_etl_spark.sources.tables import fanout
-
     return ivf_assign_for(fanout(table(spark, sf_dir, "embeddings"))).select(
         "vec_id", "cell", F.round("d2", 6).alias("dist2")
     )
@@ -585,8 +574,6 @@ def q_sim_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     no other member have no near-dup candidates and drop out, exactly as
     a production near-dup sweep wants.
     """
-    from data_pipeline_etl_spark.sources.tables import fanout
-
     # fanout: parallelize the single-row-group fixture scan for the
     # 32 interpreted 64-dim folds per vector (no-op on clusters)
     base = fanout(_normed(spark, sf_dir))
@@ -667,8 +654,6 @@ def q_sim_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one signature pass, one shuffle, in-bucket pair expansion), already
     in the ordered a < b pair space this query emits.
     """
-    from data_pipeline_etl_spark.sources.tables import fanout
-
     base = fanout(_normed(spark, sf_dir))
     pairs = _band_candidate_pairs(spark, sf_dir).select(
         F.col("a").alias("q_id"), F.col("b").alias("c_id")
@@ -1095,22 +1080,14 @@ def q_embed_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return covariance_table(spark, sf_dir)
 
 
+@artifact("embed_cov")
 def covariance_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-scoped materialize-once upper-triangle covariance of the
-    embeddings table — the ONE corpus moment pass behind
-    q_embed_covariance AND the PCA axis builds (_pca_micro_cov): at
-    100 TB the second-moment matrix is computed once and every
-    spectrum/whitening/drift consumer reads the d^2/2-row artifact.
-    See operators/materialized.py."""
-    from data_pipeline_etl_spark.operators.materialized import materialize_once
-
-    return materialize_once(
-        spark,
-        ("embed_cov", sf_dir.rstrip("/")),
-        lambda: covariance_for(
-            table(spark, sf_dir, "embeddings")
-        ).localCheckpoint(),
-    )
+    """Upper-triangle covariance of the embeddings table — the ONE
+    corpus moment pass behind q_embed_covariance AND the PCA axis builds
+    (_pca_micro_cov): at 100 TB the second-moment matrix is computed
+    once and every spectrum/whitening/drift consumer reads the
+    d^2/2-row artifact."""
+    return covariance_for(table(spark, sf_dir, "embeddings")).localCheckpoint()
 
 
 def covariance_for(e: DataFrame) -> DataFrame:
@@ -1271,8 +1248,6 @@ def q_sim_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     r17: base fanned out (the q_sim_cosine_topk pattern) — measured
     1.57× warm at sf0.1; no-op on multi-split layouts.
     """
-    from data_pipeline_etl_spark.sources.tables import fanout
-
     base = fanout(_normed(spark, sf_dir))
     q = base.where(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("q_id"),
@@ -1841,8 +1816,6 @@ def q_sim_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     r17: base fanned out (the q_sim_cosine_topk pattern) — measured
     1.26× warm at sf0.1; no-op on multi-split layouts.
     """
-    from data_pipeline_etl_spark.sources.tables import fanout
-
     base = fanout(_normed(spark, sf_dir))
     q = base.where(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("q_id"),
@@ -2042,8 +2015,6 @@ def q_sim_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosines are the module's sequential float64 folds; (d2, cell) and
     (cos_sim DESC, vec_id) orderings pin every tie cross-engine.
     """
-    from data_pipeline_etl_spark.sources.tables import fanout
-
     emb = fanout(table(spark, sf_dir, "embeddings"))
     base = emb.select(
         "vec_id", "embedding", F.sqrt(dot64("embedding", "embedding")).alias("nrm")
@@ -2485,41 +2456,27 @@ def _pca_axis1_for(
     return full, v1, n1
 
 
-def _pca_axis1_cached(spark: SparkSession, sf_dir: str, k: int = _PCA_K):
-    """Session-scoped materialize-once (full, v1, n1) for the embeddings
-    table — at 100 TB the PCA axes are a computed artifact every
-    consumer (projection, deflation, drift monitor) reads, not a
-    per-query subplan; the r15 verdict costed the per-query rebuild at
-    23.7 s / 9.9% of the bench. All returned frames root at eager
-    localCheckpoints (the covariance and each round's d-row matvec), so
-    a cache hit replays no corpus work — see operators/materialized.py."""
-    from data_pipeline_etl_spark.operators.materialized import materialize_once
-
-    return materialize_once(
-        spark,
-        ("pca_axis1", sf_dir.rstrip("/"), k),
-        lambda: _pca_axis1_for(
-            table(spark, sf_dir, "embeddings"),
-            k,
-            cov=covariance_table(spark, sf_dir),
-        ),
+@artifact("pca_axis1")
+def _pca_axis1_cached(spark: SparkSession, sf_dir: str):
+    """(full, v1, n1) for the embeddings table at _PCA_K rounds — at
+    100 TB the PCA axes are a computed artifact every consumer
+    (projection, deflation, drift monitor) reads, not a per-query
+    subplan. All returned frames root at eager localCheckpoints (the
+    covariance and each round's d-row matvec)."""
+    return _pca_axis1_for(
+        table(spark, sf_dir, "embeddings"),
+        cov=covariance_table(spark, sf_dir),
     )
 
 
-def _pca_axes_cached(spark: SparkSession, sf_dir: str, k: int = _PCA_K):
-    """Session-scoped materialize-once BOTH axes (full, v1, n1, v2, n2)
-    — layered on _pca_axis1_cached so q_embed_pca/q_embed_pca_project
-    never pay for the second ladder they don't read."""
-    from data_pipeline_etl_spark.operators.materialized import materialize_once
-
-    def build():
-        full, v1, n1 = _pca_axis1_cached(spark, sf_dir, k)
-        v2, n2 = _pca_axis2_from(full, v1, n1, k)
-        return full, v1, n1, v2, n2
-
-    return materialize_once(
-        spark, ("pca_axes2", sf_dir.rstrip("/"), k), build
-    )
+@artifact("pca_axes2")
+def _pca_axes_cached(spark: SparkSession, sf_dir: str):
+    """BOTH axes (full, v1, n1, v2, n2) — layered on _pca_axis1_cached
+    so q_embed_pca/q_embed_pca_project never pay for the second ladder
+    they don't read."""
+    full, v1, n1 = _pca_axis1_cached(spark, sf_dir)
+    v2, n2 = _pca_axis2_from(full, v1, n1, _PCA_K)
+    return full, v1, n1, v2, n2
 
 
 def _pca_micro_cov(e: DataFrame, cov: DataFrame | None = None) -> DataFrame:

@@ -12,8 +12,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_pipeline_etl_spark.checkpoints import free_local_checkpoint
+from data_pipeline_etl_spark.operators.materialized import artifact
 from data_pipeline_etl_spark.registry import query
-from data_pipeline_etl_spark.sources.tables import table
+from data_pipeline_etl_spark.sources.tables import fanout, table
 
 def _toks():
     return F.split("text", " ")
@@ -421,8 +422,6 @@ def q_text_charngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    from data_pipeline_etl_spark.sources.tables import fanout
-
     d = fanout(table(spark, sf_dir, "documents"))
     grams = d.select(
         "lang",
@@ -524,8 +523,6 @@ def q_text_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     no hash exchange anywhere in the plan (the only exchange is the
     fanout() round-robin parallelism floor, absent at cluster scale).
     """
-    from data_pipeline_etl_spark.sources.tables import fanout
-
     # per-char md5 folds dominate: parallelize the scan (measured -2.9 s
     # at sf0.1 vs a single-task single-row-group scan; no-op on clusters)
     d = fanout(table(spark, sf_dir, "documents"))
@@ -726,8 +723,6 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     serializes on the one-row-group local fixture (measured 1.41× warm
     at sf0.1; no-op on multi-split cluster layouts).
     """
-    from data_pipeline_etl_spark.sources.tables import fanout
-
     d = fanout(table(spark, sf_dir, "documents"))
     # materialize the token array once per row — inlining split(text) into
     # the lambda re-evaluates it per element_at (O(tokens²) per doc)
@@ -1644,29 +1639,22 @@ def bpe_fertility_for(
     )
 
 
-def _bpe_toks_cached(spark: SparkSession, sf_dir: str, k: int = 4) -> DataFrame:
-    """Session-scoped materialize-once TOKENIZED VOCABULARY (w, freq,
-    seq) for the documents table at k merges — the artifact a tokenizer
-    build persists and everything downstream reads: q_text_bpe_apply's
-    compression report, q_text_bpe_vocab's id table, and the
-    encode/decode/fertility corpus passes all consume this one frame.
-    Re-running the inherently-sequential k-round merge ladder per query
-    was the per-query-self-containment cost (~13.6 s across the five
-    k=4 consumers in BENCH_QUERIES r15); production trains ONCE. The
+_BPE_K = 4  # merges of the shared tokenized vocabulary
+
+
+@artifact("bpe_toks")
+def _bpe_toks_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TOKENIZED VOCABULARY (w, freq, seq) for the documents table at
+    _BPE_K merges — the artifact a tokenizer build persists and
+    everything downstream reads: q_text_bpe_apply's compression report,
+    q_text_bpe_vocab's id table, and the encode/decode/fertility corpus
+    passes all consume this one frame; production trains ONCE. The
     build is the probed bpe_apply_for body, unchanged (the trainer
     queries q_text_bpe_merge/train keep their own k=3/k=6 fresh runs —
-    single-consumer artifacts stay uncached). See
-    operators/materialized.py for the determinism/lifetime argument."""
-    from data_pipeline_etl_spark.operators.materialized import materialize_once
-    from data_pipeline_etl_spark.sources.tables import table as _table
-
-    return materialize_once(
-        spark,
-        ("bpe_toks", sf_dir.rstrip("/"), k),
-        lambda: bpe_apply_for(
-            _bpe_vocab_of(_table(spark, sf_dir, "documents")), k
-        ).localCheckpoint(),
-    )
+    single-consumer artifacts stay uncached)."""
+    return bpe_apply_for(
+        _bpe_vocab_of(table(spark, sf_dir, "documents")), _BPE_K
+    ).localCheckpoint()
 
 
 def _bpe_doc_tokens(docs: DataFrame, k: int, toks: DataFrame | None = None):
@@ -2019,7 +2007,7 @@ def q_text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bpe_train_for(_bpe_vocab(spark, sf_dir), 6)
 
 
-@query("q_text_bpe_apply", oracle=_bpe_apply_oracle(4))
+@query("q_text_bpe_apply", oracle=_bpe_apply_oracle(_BPE_K))
 def q_text_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE tokenization with a trained merge table — the APPLY half that
     closes the tokenizer loop (q_text_bpe_train learns the merges,
@@ -2041,7 +2029,7 @@ def q_text_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 30 — TakeOrderedAndProject on the Spark side, no float
     discipline needed.
     """
-    toks = _bpe_toks_cached(spark, sf_dir, 4)
+    toks = _bpe_toks_cached(spark, sf_dir)
     return (
         toks.select(
             "w",
@@ -2054,7 +2042,7 @@ def q_text_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("q_text_bpe_encode", oracle=_bpe_encode_oracle(4))
+@query("q_text_bpe_encode", oracle=_bpe_encode_oracle(_BPE_K))
 def q_text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document BPE ENCODING through the k=4 tokenizer — the third
     panel of the tokenizer story (q_text_bpe_train learns the merge
@@ -2072,12 +2060,12 @@ def q_text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-stable with no float or tie discipline."""
     return bpe_encode_for(
         table(spark, sf_dir, "documents").select("doc_id", "text"),
-        4,
-        toks=_bpe_toks_cached(spark, sf_dir, 4),
+        _BPE_K,
+        toks=_bpe_toks_cached(spark, sf_dir),
     )
 
 
-@query("q_text_bpe_vocab", oracle=_bpe_vocab_table_oracle(4))
+@query("q_text_bpe_vocab", oracle=_bpe_vocab_table_oracle(_BPE_K))
 def q_text_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The TOKEN VOCABULARY report for the k=4 tokenizer — the artifact
     a tokenizer build persists beside the merge table (embedding-table
@@ -2095,7 +2083,7 @@ def q_text_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny frame (same class as the 1-row argmax windows). All exact
     integers, total order by token — hash-stable with no float
     discipline."""
-    toks = _bpe_toks_cached(spark, sf_dir, 4)
+    toks = _bpe_toks_cached(spark, sf_dir)
     per = toks.select(
         "w", "freq", F.explode(F.split("seq", " ")).alias("tok")
     )
@@ -2115,7 +2103,7 @@ def q_text_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("q_text_bpe_decode", oracle=_bpe_decode_oracle(4))
+@query("q_text_bpe_decode", oracle=_bpe_decode_oracle(_BPE_K))
 def q_text_bpe_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE DECODE + roundtrip proof through the k=4 tokenizer — the
     closing panel of the tokenizer story (train learns the merge table,
@@ -2139,8 +2127,8 @@ def q_text_bpe_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape."""
     return bpe_decode_for(
         table(spark, sf_dir, "documents").select("doc_id", "text"),
-        4,
-        toks=_bpe_toks_cached(spark, sf_dir, 4),
+        _BPE_K,
+        toks=_bpe_toks_cached(spark, sf_dir),
     )
 
 
@@ -2211,8 +2199,6 @@ def q_text_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     1.03 s warm at sf0.1; fanout is a no-op on multi-split cluster
     layouts, values partition-invariant).
     """
-    from data_pipeline_etl_spark.sources.tables import fanout
-
     return novelty_for(fanout(table(spark, sf_dir, "documents")))
 
 
@@ -2267,7 +2253,7 @@ def novelty_for(d: DataFrame) -> DataFrame:
     )
 
 
-@query("q_text_bpe_fertility", oracle=_bpe_fertility_oracle(4))
+@query("q_text_bpe_fertility", oracle=_bpe_fertility_oracle(_BPE_K))
 def q_text_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language FERTILITY of the k=4 tokenizer — the evaluation
     panel a tokenizer build is judged on before a model ever trains:
@@ -2286,8 +2272,8 @@ def q_text_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape."""
     return bpe_fertility_for(
         table(spark, sf_dir, "documents").select("doc_id", "lang", "text"),
-        4,
-        toks=_bpe_toks_cached(spark, sf_dir, 4),
+        _BPE_K,
+        toks=_bpe_toks_cached(spark, sf_dir),
     )
 
 

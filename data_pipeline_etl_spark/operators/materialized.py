@@ -1,46 +1,24 @@
-"""Session-scoped materialize-once artifacts (VERDICT r15 item 4).
+"""Session-scoped artifacts: results built once and read by many queries.
 
-Five declared queries rebuild the identical near-dup pair graph + CC
-fixpoint per driver call (q_dedup_cluster, q_dedup_cluster_stats,
-q_split_leakage_safe, q_mix_dedup_aware, and — at half corpus —
-q_split_incremental), and four rebuild the same covariance pass +
-power-iteration ladders (the q_embed_pca family). At 100 TB a
-production pipeline materializes these ONCE — cluster labels and PCA
-axes are tables/artifacts, not per-query subplans — and every consumer
-reads them. This cache models that topology on the driver surface: the
-first caller in a session runs the probed build (plans unchanged —
-scaling_probe still measures the ``*_for`` bodies directly), later
-callers read the localCheckpoint'ed result.
+A build function ``(spark, sf_dir) -> frames`` is declared once with
+``@artifact(name)``; the decorated function returns the cached frames.
+Invariants:
 
-Value-invisible by construction: every cached build is deterministic
-(repeat-run bit-identity and partition-invariance pinned in
-tests/test_properties.py, which force fresh builds via :func:`uncached`
-so those pins never go vacuous), so a cache hit returns bit-identical
-frames. Risks from the VERDICT r15 item-4 list, addressed:
-
-- keys include BOTH ``id(spark)`` (the house key of the table-loader
-  cache in sources/tables.py) and the normalized ``sf_dir``, so
-  correctness runs at sf0.01 and bench runs at sf0.1 never cross;
-- cached frames are NEVER freed (checkpoints.free_local_checkpoint
-  discipline: a returned frame reads them) — entries die with the
-  session's JVM state;
-- sizes are bounded per (session, sf): |docs|-row label frames, d-row
-  eigenvectors, a d^2-row covariance, and q_split_incremental's
-  store-half split + element-index pair (the one index-sized entry —
-  the materialized store inverted index production screens batches
-  against, q_dedup_incremental's topology);
-- stale-path caveat (ADVICE r16): keys are (id(spark), sf_dir[, k]) —
-  if the driver regenerates fixtures AT THE SAME PATH while a session
-  is live, every cached artifact (including the r16 graph edge frames
-  pagerank_graph_table / bfs_graph_table and the r17 element/pair
-  tables) would serve the pre-regeneration data. No live-regeneration
-  scenario exists in the driver contract, and
-  scripts/round_start_check.py catches cross-round regenerations —
-  informational, not a defect.
+- the key is ``(id(spark), name, sf_dir.rstrip("/"))``, so sessions and
+  scale factors never share an artifact, and an artifact has exactly
+  one key per (session, sf_dir);
+- every build ends in eager localCheckpoints for each returned frame,
+  so a hit replays no corpus work, and every build is deterministic,
+  so a hit is bit-identical to a fresh build;
+- cached frames are never freed (a returned frame reads them); they
+  die with the session's JVM state;
+- stale-path caveat: the key is the path, so fixtures regenerated in
+  place under a live session are served from the old artifacts.
 """
 
 from __future__ import annotations
 
+import functools
 import time
 from contextlib import contextmanager
 from typing import Any, Callable, Iterator
@@ -49,41 +27,49 @@ from pyspark.sql import SparkSession
 
 _MATERIALIZED: dict[tuple, Any] = {}
 _DISABLED: bool = False
+# Child build seconds accumulated by each build in progress, innermost
+# last. Builds run on the caller's thread; no concurrent submitter in the
+# package builds artifacts.
+_CHILD_SECONDS: list[float] = []
 
-# First-touch build wall seconds per artifact, keyed by the artifact's own
-# key tuple rendered "name:part:part" (sf_dir shortened to its basename).
-# VERDICT r16 item 1: bench median-of-3 discards the one pass that pays a
-# build, so a build regression would otherwise be invisible — bench.py
-# copies this map into BENCH_QUERIES.json (additive side-file field; the
-# stdout metric is unchanged). Cleared per-process only by tests.
+# First-touch build seconds per artifact, labelled "name:<basename of
+# sf_dir>", each the build's own time without its nested builds, so the
+# entries sum to the wall time of the outermost build. bench.py and
+# perfbench read this dict by name.
 BUILD_SECONDS: dict[str, float] = {}
 
-
-def _build_label(key: tuple) -> str:
-    parts = []
-    for p in key:
-        s = str(p)
-        if "/" in s:
-            s = s.rstrip("/").rsplit("/", 1)[-1]
-        parts.append(s)
-    return ":".join(parts)
+Build = Callable[[SparkSession, str], Any]
 
 
-def materialize_once(
-    spark: SparkSession, key: tuple, build: Callable[[], Any]
-) -> Any:
-    """Return the cached artifact for ``(id(spark), *key)``, running
-    ``build()`` (which must end in eager localCheckpoints for every
-    returned frame, so a hit never replays corpus work) on first use.
-    Under :func:`uncached`, builds fresh and caches nothing."""
-    if _DISABLED:
-        return build()
-    k = (id(spark), *key)
-    if k not in _MATERIALIZED:
-        t0 = time.perf_counter()
-        _MATERIALIZED[k] = build()
-        BUILD_SECONDS[_build_label(key)] = round(time.perf_counter() - t0, 4)
-    return _MATERIALIZED[k]
+def artifact(name: str) -> Callable[[Build], Build]:
+    """Declare ``build(spark, sf_dir)`` as the session artifact ``name``.
+    Under :func:`uncached`, the decorated function builds fresh and
+    caches nothing."""
+
+    def declare(build: Build) -> Build:
+        @functools.wraps(build)
+        def get(spark: SparkSession, sf_dir: str) -> Any:
+            if _DISABLED:
+                return build(spark, sf_dir)
+            path = sf_dir.rstrip("/")
+            key = (id(spark), name, path)
+            if key not in _MATERIALIZED:
+                _CHILD_SECONDS.append(0.0)
+                t0 = time.perf_counter()
+                try:
+                    _MATERIALIZED[key] = build(spark, sf_dir)
+                finally:
+                    wall = time.perf_counter() - t0
+                    children = _CHILD_SECONDS.pop()
+                    if _CHILD_SECONDS:
+                        _CHILD_SECONDS[-1] += wall
+                label = f"{name}:{path.rsplit('/', 1)[-1]}"
+                BUILD_SECONDS[label] = round(wall - children, 4)
+            return _MATERIALIZED[key]
+
+        return get
+
+    return declare
 
 
 @contextmanager

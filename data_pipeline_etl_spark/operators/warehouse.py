@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_pipeline_etl_spark.operators.materialized import artifact
 from data_pipeline_etl_spark.registry import query
 from data_pipeline_etl_spark.sources.tables import table
 
@@ -286,16 +287,20 @@ def q_basket_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     mirrored expression tree — no float summation anywhere, so parity
     is exact by construction.
 
-    r17 (VERDICT r16 item 5): the pair frame comes from the shared
-    session-materialized :func:`co_order_pairs_table` — the identical
-    within-order self-join the topk_edges_table build sparsifies, paid
-    once per session instead of once per call (measured 2.13 → 0.83 s
-    warm at sf0.1; the freq/n aggregates still scan the cached
-    lineitem, one pass). Values identical: same pairs, same counts.
+    The pair frame comes from the shared :func:`co_order_pairs_table`
+    artifact, paid once per session instead of once per call; the
+    freq/n aggregates still scan the cached lineitem, one pass.
     """
+    return _basket_scores(
+        co_order_pairs_table(spark, sf_dir), _order_items(spark, sf_dir)
+    )
+
+
+def _order_items(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The distinct (l_orderkey, l_partkey) item frame every co-order
+    query and graph starts from."""
     l = table(spark, sf_dir, "lineitem")
-    items = l.select("l_orderkey", "l_partkey").distinct()
-    return _basket_scores(co_order_pairs_table(spark, sf_dir), items)
+    return l.select("l_orderkey", "l_partkey").distinct()
 
 
 def basket_affinity_for(items: DataFrame) -> DataFrame:
@@ -310,10 +315,10 @@ def basket_affinity_for(items: DataFrame) -> DataFrame:
 def _co_order_pairs(items: DataFrame) -> DataFrame:
     """Within-order part-pair co-occurrence counts
     (part_a < part_b, c_ab) over a (l_orderkey, l_partkey) item frame —
-    the ONE self-join both q_basket_affinity and the top-k affinity
-    graph build (:func:`_topk_affinity_edges`) start from. Fan-out is
-    bounded by basket size (≤ C(7,2) pairs per order), never an
-    all-parts cross join."""
+    the ONE self-join q_basket_affinity, the top-k affinity graph
+    (:func:`_topk_affinity_edges`), pagerank and BFS all start from.
+    Fan-out is bounded by basket size (≤ C(7,2) pairs per order), never
+    an all-parts cross join."""
     a = items.select(
         F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("part_a")
     )
@@ -328,24 +333,17 @@ def _co_order_pairs(items: DataFrame) -> DataFrame:
     )
 
 
+@artifact("co_order_pairs")
 def co_order_pairs_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-scoped materialize-once co-order pair-count frame
-    (part_a, part_b, c_ab) over lineitem — the shared artifact under
-    q_basket_affinity AND the topk_edges_table build (which feeds
-    q_graph_triangles / q_graph_neighbor_jaccard): three declared
-    queries previously each paid the identical within-order self-join.
-    ~1.2 M rows of three longs at sf0.1 (measured 2.5 s to build once);
-    at 100 TB this is the materialized co-occurrence table every
-    affinity consumer reads. Probe bodies (basket_affinity_for /
-    triangles_for / neighbor_jaccard_for) still build fresh pairs."""
-    from data_pipeline_etl_spark.operators.materialized import materialize_once
-
-    def _build() -> DataFrame:
-        l = table(spark, sf_dir, "lineitem")
-        items = l.select("l_orderkey", "l_partkey").distinct()
-        return _co_order_pairs(items).localCheckpoint()
-
-    return materialize_once(spark, ("co_order_pairs", sf_dir.rstrip("/")), _build)
+    """Co-order pair-count frame (part_a, part_b, c_ab) over lineitem —
+    the shared artifact under q_basket_affinity and the topk_edges,
+    pagerank_graph and bfs_graph builds: five declared queries read one
+    within-order self-join. ~1.2 M rows of three longs at sf0.1; at
+    100 TB this is the materialized co-occurrence table every affinity
+    consumer reads. Probe bodies (basket_affinity_for / triangles_for /
+    neighbor_jaccard_for / pagerank_for / bfs_hops_for) still build
+    fresh pairs."""
+    return _co_order_pairs(_order_items(spark, sf_dir)).localCheckpoint()
 
 
 def _basket_scores(pairs: DataFrame, items: DataFrame) -> DataFrame:
@@ -560,23 +558,16 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _pagerank_from(*pagerank_graph_table(spark, sf_dir))
 
 
+@artifact("pagerank_graph")
 def pagerank_graph_table(spark: SparkSession, sf_dir: str):
-    """Session-scoped materialize-once pagerank graph pair
-    (dst-clustered edge+degree frame, node×n base frame) over lineitem
-    (r16 continuation, measured: the build is 4.2-4.9 s warm at sf0.1
-    vs ~1.5-2 s for the three unrolled iterations — the same
-    build-per-call redundancy the artifact layer removes everywhere
-    else; see operators/materialized.py). Both frames are
+    """Pagerank graph pair (dst-clustered edge+degree frame, node×n base
+    frame) over the shared :func:`co_order_pairs_table`. Both frames are
     iteration-invariant: the per-call work is exactly the three damped
     rounds. The probe body (:func:`pagerank_for`) keeps building fresh
     so scaling_probe still measures the full declared plan."""
-    from data_pipeline_etl_spark.operators.materialized import materialize_once
-
-    def _build():
-        l = table(spark, sf_dir, "lineitem")
-        return _pagerank_build(l.select("l_orderkey", "l_partkey").distinct())
-
-    return materialize_once(spark, ("pagerank_graph", sf_dir.rstrip("/")), _build)
+    return _pagerank_build(
+        co_order_pairs_table(spark, sf_dir), _order_items(spark, sf_dir)
+    )
 
 
 def pagerank_for(items: DataFrame) -> DataFrame:
@@ -585,26 +576,28 @@ def pagerank_for(items: DataFrame) -> DataFrame:
     the exact declared plan shape INCLUDING a fresh graph build (the
     declared query reads the session-materialized
     pagerank_graph_table)."""
-    return _pagerank_from(*_pagerank_build(items))
+    return _pagerank_from(*_pagerank_build(_co_order_pairs(items), items))
 
 
-def _pagerank_build(items: DataFrame):
-    """The iteration-invariant half of the pagerank plan: the
+def _undirected_edges(pairs: DataFrame) -> DataFrame:
+    """Both directions (src, dst) of each co-order pair: the edge set
+    pagerank and BFS walk."""
+    fwd = pairs.select(F.col("part_a").alias("src"), F.col("part_b").alias("dst"))
+    return fwd.unionByName(
+        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+
+
+def _pagerank_build(pairs: DataFrame, items: DataFrame):
+    """The iteration-invariant half of the pagerank plan over a
+    (part_a, part_b, c_ab) pair frame and its item frame: the
     dst-clustered edge+degree checkpoint and the node×n base
     checkpoint (one build, reused by all three unrolled rounds —
     and, via pagerank_graph_table, by every call in a session)."""
-    a = items.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("src"))
-    b = items.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("dst"))
-    pairs = (
-        a.join(b, "k")
-        .where(F.col("src") < F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
     # The edge and node frames feed every iteration: checkpoint them once
-    # (same barrier q_dedup_cluster uses) so the order-key self-join and
-    # the distinct don't re-execute per unrolled round. The source degree
-    # is ITERATION-INVARIANT, so it is joined onto the edge frame once,
+    # (same barrier q_dedup_cluster uses) so the order-key self-join
+    # doesn't re-execute per unrolled round. The source degree is
+    # ITERATION-INVARIANT, so it is joined onto the edge frame once,
     # before the loop, instead of re-broadcast every round (controlled
     # 5-rep compare at sf0.1: wall UNCHANGED vs the per-round broadcast
     # — tiny-frame broadcasts are nearly free locally; the hoist is
@@ -615,9 +608,7 @@ def _pagerank_build(items: DataFrame):
     # scale edges would be bucketed on src to make that shuffle-free
     # too). The fold stays sum(pr / d) — NOT a precomputed reciprocal —
     # so the oracle's expression tree is reproduced bit-for-bit.
-    edges = pairs.unionByName(
-        pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    edges = _undirected_edges(pairs)
     deg = edges.groupBy("src").agg(F.count("*").cast("double").alias("d"))
     # The edge frame is CLUSTERED ON dst before the checkpoint (r16,
     # measured): localCheckpoint does NOT preserve partitioning metadata
@@ -792,25 +783,15 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _triangles_from_edges(topk_edges_table(spark, sf_dir))
 
 
+@artifact("topk_edges")
 def topk_edges_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-scoped materialize-once sparsified top-2 co-order edge
-    frame (a, b) over lineitem — the ONE graph q_graph_triangles closes
-    wedges on and q_graph_neighbor_jaccard scores them on (r16
-    continuation, measured: the edge build is ~3 s warm at sf0.1, the
-    triangles consume 0.33 s — two declared queries each paying the
-    identical build is the same redundancy the artifact layer removes
-    everywhere else; see operators/materialized.py). The probe bodies
-    (triangles_for / neighbor_jaccard_for) keep building fresh edges so
-    scaling_probe still measures the full declared plan. r17: the build
-    reads the shared :func:`co_order_pairs_table` instead of re-running
-    the within-order self-join (values identical — same pair counts,
-    same sparsification)."""
-    from data_pipeline_etl_spark.operators.materialized import materialize_once
-
-    def _build() -> DataFrame:
-        return _topk_edges_from_pairs(co_order_pairs_table(spark, sf_dir))
-
-    return materialize_once(spark, ("topk_edges", sf_dir.rstrip("/")), _build)
+    """Sparsified top-2 co-order edge frame (a, b) over the shared
+    :func:`co_order_pairs_table` — the ONE graph q_graph_triangles
+    closes wedges on and q_graph_neighbor_jaccard scores them on. The
+    probe bodies (triangles_for / neighbor_jaccard_for) keep building
+    fresh edges so scaling_probe still measures the full declared
+    plan."""
+    return _topk_edges_from_pairs(co_order_pairs_table(spark, sf_dir))
 
 
 def _topk_affinity_edges(items: DataFrame) -> DataFrame:
@@ -1130,22 +1111,18 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _bfs_from(*bfs_graph_table(spark, sf_dir))
 
 
+@artifact("bfs_graph")
 def bfs_graph_table(spark: SparkSession, sf_dir: str):
-    """Session-scoped materialize-once BFS graph pair (undirected edge
-    checkpoint, seed checkpoint) over lineitem (r16 continuation,
-    measured: the build is ~1.5-2.0 s warm at sf0.1 vs ~1.2 s for the
-    three hop joins). Both frames are hop-invariant; the per-call work
-    is the frontier expansion. The probe body (:func:`bfs_hops_for`)
-    keeps building fresh so scaling_probe still measures the full
-    declared plan — including the 100× memory envelope the r16
-    dst-clustering rejection was probed against."""
-    from data_pipeline_etl_spark.operators.materialized import materialize_once
-
-    def _build():
-        l = table(spark, sf_dir, "lineitem")
-        return _bfs_build(l.select("l_orderkey", "l_partkey").distinct())
-
-    return materialize_once(spark, ("bfs_graph", sf_dir.rstrip("/")), _build)
+    """BFS graph pair (undirected edge checkpoint, seed checkpoint) over
+    the shared :func:`co_order_pairs_table`. Both frames are
+    hop-invariant; the per-call work is the frontier expansion. The
+    probe body (:func:`bfs_hops_for`) keeps building fresh so
+    scaling_probe still measures the full declared plan — including the
+    100× memory envelope the dst-clustering rejection was probed
+    against."""
+    return _bfs_build(
+        co_order_pairs_table(spark, sf_dir), _order_items(spark, sf_dir)
+    )
 
 
 def bfs_hops_for(items: DataFrame) -> DataFrame:
@@ -1153,22 +1130,14 @@ def bfs_hops_for(items: DataFrame) -> DataFrame:
     shared by scripts/scaling_probe.py so the probe measures the exact
     declared plan shape INCLUDING a fresh graph build (the declared
     query reads the session-materialized bfs_graph_table)."""
-    return _bfs_from(*_bfs_build(items))
+    return _bfs_from(*_bfs_build(_co_order_pairs(items), items))
 
 
-def _bfs_build(items: DataFrame):
-    """The hop-invariant half of the BFS plan: the undirected edge
-    checkpoint and the min-part seed checkpoint (one build, reused by
-    all three hop joins — and, via bfs_graph_table, by every call in a
-    session)."""
-    a = items.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("src"))
-    b = items.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("dst"))
-    pairs = (
-        a.join(b, "k")
-        .where(F.col("src") < F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
+def _bfs_build(pairs: DataFrame, items: DataFrame):
+    """The hop-invariant half of the BFS plan over a (part_a, part_b,
+    c_ab) pair frame and its item frame: the undirected edge checkpoint
+    and the min-part seed checkpoint (one build, reused by all three hop
+    joins — and, via bfs_graph_table, by every call in a session)."""
     # NOT dst-clustered, deliberately (r16, measured): pagerank_for's
     # repartition("dst") rule was tried here too — the per-hop
     # distinct() has the same partial-state fan-in term and the A/B won
@@ -1178,9 +1147,7 @@ def _bfs_build(items: DataFrame):
     # On a real cluster the clustering write spreads across executors
     # and the trade likely flips back, but the claim is probed here, so
     # the plan stays the one whose 100x cell is green.
-    edges = pairs.unionByName(
-        pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
+    edges = _undirected_edges(pairs).localCheckpoint(eager=True)
     seed = items.agg(F.min("l_partkey").alias("node")).localCheckpoint(eager=True)
     return edges, seed
 

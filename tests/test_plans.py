@@ -589,6 +589,22 @@ def test_cc_checkpoint_storage_bounded(spark):
     assert len(persisted() - before) == 1, persisted() - before
 
 
+def test_ngram_elements_held_once(spark):
+    """q_dedup_ngram reads its bigram element frame from the session
+    artifact: a second call in one session adds no persistent RDD (a
+    per-call checkpoint would add one held element copy per call)."""
+    jsc = spark.sparkContext._jsc
+
+    def persisted() -> set[int]:
+        return {int(i) for i in jsc.getPersistentRDDs().keySet().toArray()}
+
+    first = QUERIES["q_dedup_ngram"](spark, SF_DIR).collect()
+    before = persisted()
+    second = QUERIES["q_dedup_ngram"](spark, SF_DIR).collect()
+    assert sorted(second) == sorted(first)
+    assert persisted() - before == set()
+
+
 def test_corpus_report_single_scan_no_explode(spark):
     """The corpus health report must read the corpus exactly ONCE and
     never explode it: token counts come from size(split(..)) per row,

@@ -4874,6 +4874,25 @@ def test_materialized_cache_keys_per_sf_dir(spark, tmp_path):
     assert run(a_dir) == first_a
 
 
+def _write_baskets(spark, d, baskets):
+    """A lineitem-only fixture at ``d``: one row per (order, part)."""
+    rows = []
+    for ok, parts in baskets.items():
+        for i, p in enumerate(parts):
+            rows.append(
+                (ok, p, 1, i + 1, 1.0, 10.0, 0.0, 0.0, "N", "O", "2024-01-01")
+            )
+    spark.createDataFrame(
+        rows,
+        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int, "
+        "l_quantity double, l_extendedprice double, l_discount double, "
+        "l_tax double, l_returnflag string, l_linestatus string, "
+        "l_shipdate string",
+    ).withColumn(
+        "l_shipdate", F.col("l_shipdate").cast("timestamp")
+    ).write.parquet(f"{d}/lineitem.parquet")
+
+
 def test_graph_artifacts_key_per_sf_dir(spark, tmp_path):
     """Same discipline for the session-materialized graph artifacts
     (pagerank_graph_table / bfs_graph_table): two different co-order
@@ -4881,24 +4900,7 @@ def test_graph_artifacts_key_per_sf_dir(spark, tmp_path):
     A: path 10-20-30 (seed 10 reaches 20@1, 30@2); graph B: pair
     40-50 only (seed 40 reaches 50@1). A collision would hand B graph
     A's edges; re-querying A returns A's cached result."""
-
-    def write(d, baskets):
-        rows = []
-        for ok, parts in baskets.items():
-            for i, p in enumerate(parts):
-                rows.append(
-                    (ok, p, 1, i + 1, 1.0, 10.0, 0.0, 0.0, "N", "O", "2024-01-01")
-                )
-        spark.createDataFrame(
-            rows,
-            "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int, "
-            "l_quantity double, l_extendedprice double, l_discount double, "
-            "l_tax double, l_returnflag string, l_linestatus string, "
-            "l_shipdate string",
-        ).withColumn(
-            "l_shipdate", F.col("l_shipdate").cast("timestamp")
-        ).write.parquet(f"{d}/lineitem.parquet")
-
+    write = lambda d, baskets: _write_baskets(spark, d, baskets)  # noqa: E731
     a_dir, b_dir = str(tmp_path / "sf_a"), str(tmp_path / "sf_b")
     write(a_dir, {1: [10, 20], 2: [20, 30]})
     write(b_dir, {1: [40, 50]})
@@ -4915,3 +4917,30 @@ def test_graph_artifacts_key_per_sf_dir(spark, tmp_path):
         for r in QUERIES["q_graph_pagerank"](spark, b_dir).collect()
     }
     assert set(pr) == {40, 50} and pr[40] == pr[50]
+
+
+def test_graph_artifacts_share_one_pair_build(spark, tmp_path, monkeypatch):
+    """q_graph_bfs then q_graph_pagerank on a fresh sf_dir build exactly
+    three artifacts: the co-order pair frame once, and each graph from
+    it. A graph build that re-ran its own self-join, or a pair frame
+    built twice, would show up as a different ledger."""
+    from data_pipeline_etl_spark.operators import materialized
+
+    monkeypatch.setattr(materialized, "BUILD_SECONDS", {})
+    d = str(tmp_path / "sf_graph")
+    # path 10-20-30 plus a triangle 30-40-50 in one order
+    _write_baskets(spark, d, {1: [10, 20], 2: [20, 30], 3: [30, 40, 50]})
+    hops = {
+        r["l_partkey"]: r["hops"] for r in QUERIES["q_graph_bfs"](spark, d).collect()
+    }
+    assert hops == {10: 0, 20: 1, 30: 2, 40: 3, 50: 3}
+    pr = {
+        r["l_partkey"]: r["pr_rel"]
+        for r in QUERIES["q_graph_pagerank"](spark, d).collect()
+    }
+    assert set(pr) == {10, 20, 30, 40, 50} and pr[40] == pr[50]
+    assert set(materialized.BUILD_SECONDS) == {
+        "co_order_pairs:sf_graph",
+        "bfs_graph:sf_graph",
+        "pagerank_graph:sf_graph",
+    }
