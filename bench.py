@@ -117,6 +117,9 @@ def main() -> None:
             {
                 "total_sec": total,
                 "sf": sf,
+                # local[N] slots the timings ran on: a side file from an
+                # 8-core run does not compare with a 4-core one
+                "cpus": spark.sparkContext.defaultParallelism,
                 "n_queries": len(timings),
                 "timing": "median of 3 full passes",
                 "artifact_build_sec": dict(sorted(BUILD_SECONDS.items())),

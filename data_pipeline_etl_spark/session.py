@@ -16,6 +16,12 @@ The non-default confs and why (SURVEY.md §4.3, §1.3):
 - ``spark.sql.shuffle.partitions`` — sized to the local core count; 200
   default is pure scheduling overhead at test scale. On a real cluster this
   is left to AQE coalescing (adaptive.enabled stays on).
+
+``configure`` also puts the package's parent directory on the Python
+workers' ``PYTHONPATH`` (``SparkContext.environment``, which every Python
+UDF ships to its workers): a worker unpickles a UDF defined in this
+package by importing it, and without the entry that import only works when
+the JVM was started from the repository root.
 """
 
 from __future__ import annotations
@@ -25,6 +31,8 @@ import os
 from pyspark.sql import SparkSession
 
 APP_NAME = "data-pipeline-etl-spark"
+# The directory that holds the package, for the Python workers' imports.
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _cpus() -> int:
@@ -38,6 +46,10 @@ def configure(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.shuffle.partitions", str(_cpus()))
     spark.conf.set("spark.sql.adaptive.enabled", "true")
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if PACKAGE_ROOT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([PACKAGE_ROOT, *paths])
     return spark
 
 

@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import LongType, StructType
 
 from data_pipeline_etl_spark.session import configure
 
@@ -45,6 +45,10 @@ TABLE_NAMES = (
 # Logical-plan cache: keyed by (session id, sf_dir, table). DataFrames are
 # lazy; caching avoids re-reading parquet footers per query, not data.
 _CACHE: dict[tuple[int, str, str], DataFrame] = {}
+# The parquet schema each cached table arrived with, under the same key:
+# readers that need the arriving types (the events stream's declared
+# schema) take them from here instead of probing the footer again.
+_RAW_SCHEMA: dict[tuple[int, str, str], StructType] = {}
 
 
 def fanout(df: DataFrame) -> DataFrame:
@@ -75,6 +79,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         configure(spark)
         path = f"{sf_dir.rstrip('/')}/{name}.parquet"
         df = spark.read.parquet(path)
+        _RAW_SCHEMA[key] = df.schema
         if name == "events":
             # Fixture generations have shipped ts as INT64 TIMESTAMP(NANOS)
             # (arrives as a ns long under nanosAsLong=true) AND as plain
@@ -90,6 +95,14 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 df = df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
         _CACHE[key] = df
     return _CACHE[key]
+
+
+def raw_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """The parquet schema ``table`` found for ``name``, before any type
+    fix-up; reads the footer only if the table is not loaded yet, and is
+    exactly as fresh as the ``table`` cache."""
+    table(spark, sf_dir, name)
+    return _RAW_SCHEMA[(id(spark), sf_dir.rstrip("/"), name)]
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

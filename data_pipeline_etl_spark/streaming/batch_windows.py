@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_pipeline_etl_spark.registry import query
-from data_pipeline_etl_spark.sources.tables import table
+from data_pipeline_etl_spark.sources.tables import raw_schema, table
 
 
 @query(
@@ -307,16 +307,14 @@ def _events_stream(spark: SparkSession, sf_dir: str):
     """readStream over the events fixture with the same arriving-type
     dispatch as sources/tables.py: fixture generations ship ts as INT64
     TIMESTAMP(NANOS) (arrives BIGINT under nanosAsLong) or
-    TIMESTAMP(MICROS) (arrives timestamp) — probe the footer via a batch
-    read (metadata-only) and declare the matching streaming schema."""
+    TIMESTAMP(MICROS) (arrives timestamp) — declare the matching
+    streaming schema from the type the loader found, so building the
+    stream starts no Spark job once the session has read events."""
     from data_pipeline_etl_spark.session import configure
     from pyspark.sql.types import LongType
 
-    configure(spark)  # nanosAsLong for the raw events.parquet read
-    raw_ts = (
-        spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet").schema["ts"].dataType
-    )
-    ns_long = isinstance(raw_ts, LongType)
+    configure(spark)  # nanosAsLong and UTC for the stream's own read
+    ns_long = isinstance(raw_schema(spark, sf_dir, "events")["ts"].dataType, LongType)
     schema = (
         f"event_id BIGINT, ts {'BIGINT' if ns_long else 'TIMESTAMP_NTZ'}, "
         "user_id BIGINT, event_type STRING, value DOUBLE, props STRING"

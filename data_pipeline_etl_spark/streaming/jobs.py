@@ -14,6 +14,7 @@ On a cluster the same code runs against Kafka by swapping the source.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,6 +60,34 @@ def dedup_within_watermark(df: DataFrame) -> DataFrame:
     return df.dropDuplicatesWithinWatermark(["event_id"])
 
 
+# Spark's checkpoint manager over ``FileSystem.rename``, for drains only
+# (run_to_memory_sink). The conf is internal and the class moved package
+# between Spark 3.x (org.apache.spark.sql.execution.streaming) and 4.x, so
+# the name lives here once and a test resolves it in the session's JVM.
+FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+@contextmanager
+def _session_confs(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` on the session for the block, then restore each key
+    to the caller's own value, or unset it if the caller had none."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def run_to_memory_sink(
     stream_df: DataFrame,
     query_name: str,
@@ -82,29 +111,50 @@ def run_to_memory_sink(
     and on ``local[4]`` 4 beats 8, which runs two waves per batch
     (q_stream_tumbling_live, warm median over 15 perfbench etl_ingest
     runs on 4 vCPUs: 1.20 -> 1.11 s). The knob only affects
-    physical state layout — values are identical for any setting — and
-    is restored immediately after the drain so batch queries keep the
-    session default.
+    physical state layout — values are identical for any setting. On a
+    real cluster you size it to |cores| .. |state volume / target
+    partition size|, and it is FIXED for the life of a checkpoint
+    (changing it requires a state rebuild — Spark refuses to reload
+    state across a partition-count change).
 
-    CONCURRENCY ASSUMPTION: the shuffle-partition override is a
-    session-global conf mutation for the duration of the drain — any
-    batch query planned concurrently on the same SparkSession would
-    plan with ``state_partitions`` partitions during that window.
-    The package does submit concurrent jobs (``run_etl``'s loads and
-    quality gate), but none of them drains a stream, and tests, bench
-    and driver run the drains themselves sequentially, so this is safe
-    here; a concurrent caller must isolate the drain
-    on ``spark.newSession()`` (confs are per-session) instead. On a real cluster you size it to
-    |cores| .. |state volume / target partition size|, and it is FIXED
-    for the life of a checkpoint (changing it requires a state rebuild
-    — Spark refuses to reload state across a partition-count change).
+    The drain also swaps the checkpoint manager for
+    ``FS_CHECKPOINT_MANAGER``. Spark's default for ``file:`` is
+    FileContext-based, and pip-installed PySpark ships no libhadoop, so
+    Hadoop's local file system forks a process for each ``readlink`` of
+    a rename and each ``chmod`` of a created file: one drain of
+    q_stream_tumbling_live forked 152 processes (112 ``readlink``, 40
+    ``chmod``; JFR on the driver JVM, sf0.1, 4-vCPU VM). With
+    ``FileSystem.rename`` it forks 40, none of them a ``readlink``. The swap is safe only because a drain
+    never passes ``checkpointLocation``: its checkpoint is a private
+    temporary directory on the local file system, where
+    ``FileSystem.rename`` is an atomic POSIX rename. FileContext's
+    overwrite-rename guards concurrent writers of a shared checkpoint,
+    which only user checkpoints have, so ``configure()`` and
+    ``run_foreach_batch_parquet`` keep Spark's default.
+
+    Both confs are set for the drain and restored right after it: each
+    key goes back to the caller's own value, or is unset if the caller
+    had none, so batch queries keep the session default.
+
+    CONCURRENCY ASSUMPTION: both overrides are session-global conf
+    mutations for the duration of the drain — any batch query planned
+    concurrently on the same SparkSession would plan with
+    ``state_partitions`` partitions, and any stream started concurrently
+    with a user checkpoint would get the FileSystem-based manager, during
+    that window. The package does submit concurrent jobs (``run_etl``'s
+    loads and quality gate), but none of them drains or starts a stream,
+    and tests, bench and driver run the drains themselves sequentially,
+    so this is safe here; a concurrent caller must isolate the drain
+    on ``spark.newSession()`` (confs are per-session) instead.
     """
     spark = stream_df.sparkSession
     if state_partitions is None:
         state_partitions = min(8, spark.sparkContext.defaultParallelism)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
+    drain_confs = {
+        "spark.sql.shuffle.partitions": str(state_partitions),
+        CHECKPOINT_MANAGER_CONF: FS_CHECKPOINT_MANAGER,
+    }
+    with _session_confs(spark, drain_confs):
         q = (
             stream_df.writeStream.format("memory")
             .queryName(query_name)
@@ -113,8 +163,6 @@ def run_to_memory_sink(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def run_foreach_batch_parquet(

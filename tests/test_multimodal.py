@@ -8,12 +8,16 @@ shape, determinism, and payload integrity end-to-end through mapInPandas.
 from __future__ import annotations
 
 import hashlib
+import json
+import os
+import subprocess
+import sys
 
 from pyspark.sql import functions as F
 
 from data_pipeline_etl_spark.sources.tables import table
 from data_pipeline_etl_spark.streaming import multimodal
-from tests.conftest import SF_DIR
+from tests.conftest import REPO_DIR, SF_DIR
 
 
 def test_asset_schema(spark):
@@ -299,3 +303,34 @@ def test_wav_first_fmt_data_win():
     rate, back = multimodal.decode_wav(wav)
     assert rate == 16000
     assert np.array_equal(back, first)
+
+
+def test_udf_queries_run_from_any_working_directory(tmp_path):
+    """Python workers import the package without PYTHONPATH or the repo as
+    working directory: a fresh driver in ``tmp_path`` runs the two
+    UDF-surface multimodal queries (mapInPandas decode and phash)."""
+    script = f"""
+import json, sys
+sys.path.insert(0, {REPO_DIR!r})
+from data_pipeline_etl_spark.registry import QUERIES, load_all_operators
+from data_pipeline_etl_spark.session import get_spark
+load_all_operators()
+spark = get_spark("udf-cwd")
+names = ("q_multimodal_phash", "q_multimodal_decode")
+print(json.dumps({{n: len(QUERIES[n](spark, {SF_DIR!r}).collect()) for n in names}}))
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_DRIVER_MEMORY="1g")
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    rows = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert rows["q_multimodal_phash"] > 0
+    assert rows["q_multimodal_decode"] > 0

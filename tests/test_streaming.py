@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import shutil
 import time
+import uuid
 from datetime import datetime
 
 import pytest
@@ -147,6 +148,83 @@ def test_stream_dedup_within_watermark(spark, tmp_path):
     jobs.run_to_memory_sink(deduped.select("event_id"), "dedup_mem", "append")
     ids = sorted(r["event_id"] for r in spark.sql("SELECT * FROM dedup_mem").collect())
     assert ids == [1, 2, 3]
+
+
+_DRAIN_CONFS = ("spark.sql.shuffle.partitions", jobs.CHECKPOINT_MANAGER_CONF)
+
+
+@pytest.mark.parametrize("caller_set", [False, True], ids=["unset", "set"])
+def test_drain_restores_callers_confs(spark, tmp_path, caller_set):
+    """A drain overrides the state partitions and the checkpoint manager
+    only for its own run: afterwards each conf is exactly the caller's —
+    the same value if the caller set one, still unset if not."""
+    src = str(tmp_path / "conf_src")
+    _write_batch(spark, src, [(1, _ts("2024-01-01 10:00:00"), 1, "view", 1.0, "{}")])
+    caller = {
+        "spark.sql.shuffle.partitions": "3",
+        jobs.CHECKPOINT_MANAGER_CONF: jobs.FS_CHECKPOINT_MANAGER.replace(
+            "FileSystemBased", "FileContextBased"
+        ),
+    }
+    saved = {k: spark.conf.get(k, None) for k in _DRAIN_CONFS}
+    try:
+        for k in _DRAIN_CONFS:
+            if caller_set:
+                spark.conf.set(k, caller[k])
+            else:
+                spark.conf.unset(k)
+        before = {k: spark.conf.get(k, None) for k in _DRAIN_CONFS}
+        stream = jobs.events_file_stream(spark, src)
+        jobs.run_to_memory_sink(jobs.tumbling_counts(stream), "conf_mem", "complete")
+        after = {k: spark.conf.get(k, None) for k in _DRAIN_CONFS}
+        assert spark.sql("SELECT n FROM conf_mem").collect() == [(1,)]
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert before == (caller if caller_set else dict.fromkeys(_DRAIN_CONFS))
+    assert after == before
+
+
+def test_fs_checkpoint_manager_class_resolves(spark):
+    """The drain's checkpoint-manager class exists in this Spark and is a
+    CheckpointFileManager: a Spark upgrade that moves it fails here, not
+    in every live query."""
+    jvm = spark.sparkContext._jvm
+    cls = jvm.java.lang.Class.forName(jobs.FS_CHECKPOINT_MANAGER)
+    package = jobs.FS_CHECKPOINT_MANAGER.rsplit(".", 1)[0]
+    base = jvm.java.lang.Class.forName(f"{package}.CheckpointFileManager")
+    assert cls.getName() == jobs.FS_CHECKPOINT_MANAGER
+    assert base.isAssignableFrom(cls)
+
+
+def test_events_stream_builds_without_a_spark_job(spark):
+    """After the session's first events read, building the live queries'
+    events stream starts no Spark job: its schema comes from the footer
+    the loader already read. A footer probe in the same job group is
+    the control that the status tracker sees such a job."""
+    from data_pipeline_etl_spark.streaming.batch_windows import _events_stream
+
+    sc = spark.sparkContext
+    status = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    table(spark, SF_DIR, "events")
+
+    def jobs_in_fresh_group(build) -> int:
+        group = f"events-stream-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "build the events stream")
+        try:
+            build()
+        finally:
+            sc._jsc.clearJobGroup()
+        bus.waitUntilEmpty(10_000)
+        return len(status.getJobIdsForGroup(group))
+
+    assert jobs_in_fresh_group(lambda: _events_stream(spark, SF_DIR)) == 0
+    probe = lambda: spark.read.parquet(f"{SF_DIR}/events.parquet").schema  # noqa: E731
+    assert jobs_in_fresh_group(probe) >= 1
 
 
 def test_foreach_batch_parquet_sink(spark, events_stream_dir, tmp_path):
